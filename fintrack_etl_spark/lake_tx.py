@@ -10,9 +10,10 @@ data for version N is fully written into its own immutable directory
 - a crash anywhere before the swap leaves the previous version intact
   (the orphaned directory is invisible and gets clobbered/vacuumed);
 - streaming replay is exactly-once: the manifest records the last
-  applied ``batch_id`` at the SAME commit point as the data, closing
-  the two-statement commit-gap the catalog-table sinks document
-  (``streaming/pipelines.py``);
+  applied ``batch_id`` at the SAME commit point as the data, so every
+  streaming sink here (one commit path, ``_versioned_fold``) skips a
+  replayed batch and refuses a reset checkpoint — there is no window
+  between a state write and a separate batch-id write;
 - MERGE never reads the directory it writes (vN in, vN+1 out), so the
   self-overwrite ``localCheckpoint`` pin is unnecessary here.
 
@@ -303,85 +304,6 @@ def replace_by_source_key_versioned(
     return commit_table(out, root, batch_id)
 
 
-def upsert_sink_stream_versioned(
-    stream: DataFrame,
-    checkpoint_dir: str,
-    root: str,
-    keys: list[str],
-    order_col: str,
-    tie_breakers: list[str] | None = None,
-):
-    """Streaming latest-wins sink with exactly-once COMMITS: the
-    manifest's batch_id and the data publish at the same atomic
-    rename, so a batch replayed after any crash is either (a) fully
-    committed already — detected and skipped — or (b) never visible —
-    re-merged from the same deterministic inputs. No commit-point gap.
-
-    Returns the started query; callers ``awaitTermination()``."""
-    from .operators.windows import dedup_latest
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= last_batch_id(root):
-            return  # already committed — checkpoint replay
-        if batch_df.isEmpty():
-            return
-        incoming = dedup_latest(batch_df, keys, order_col, tie_breakers)
-        merge_latest_wins_versioned(
-            batch_df.sparkSession, root, incoming, keys, order_col, tie_breakers, batch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def continuous_aggregate_stream_versioned(
-    stream: DataFrame,
-    checkpoint_dir: str,
-    root: str,
-    keys: list[str],
-    value_col: str,
-):
-    """Continuous aggregate with exactly-once COMMITS. The sum-merge is
-    not idempotent, so this is where the atomic (data, batch_id) commit
-    matters most: the catalog-table variant documents a double-count
-    window between its state and meta writes — here that window does
-    not exist. Checkpoint-reset detection mirrors
-    ``streaming.continuous_aggregate_stream``.
-
-    Returns the started query; callers ``awaitTermination()``."""
-    from .operators.incremental import merge_aggregate_state, partial_aggregate
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        last = last_batch_id(root)
-        if batch_id == last:
-            return  # committed already — checkpoint replay
-        if batch_id < last:
-            raise RuntimeError(
-                f"continuous_aggregate_stream_versioned({root}): batch_id "
-                f"{batch_id} < committed {last} — checkpoint was reset while "
-                "the table survived; refusing to skip or double-count."
-            )
-        spark = batch_df.sparkSession
-        delta = partial_aggregate(batch_df, keys, value_col)
-        state = (
-            merge_aggregate_state(read_table(spark, root), delta, keys)
-            if table_exists(root)
-            else delta
-        )
-        commit_table(state, root, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 class CommitConflictError(RuntimeError):
     """Another writer published a version between this transaction's
     snapshot read and its commit attempt."""
@@ -509,14 +431,148 @@ def delete_rows(
     contain the rows until ``expire_versions`` vacuums them — complete
     erasure = delete_rows + expire_versions(retain_last=1), exactly
     like Delta/Iceberg VACUUM semantics.
+
+    ``batch_id=None`` keeps the committed batch_id (as
+    ``compact_table`` does), so deleting from a streaming sink's table
+    — e.g. vacuuming CDC tombstones — leaves its replay guard intact.
     """
     cur = read_table(spark, root)
+    if batch_id is None:
+        batch_id = read_manifest(root).get("batch_id")
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     doomed = cur.filter(cond)
     n = doomed.count()
     kept = cur.filter(~cond | cond.isNull())
     v = commit_table(kept, root, batch_id=batch_id)
     return v, n
+
+
+# ---------------------------------------------------------------------------
+# Streaming sinks — every micro-batch fold commits through one path
+# ---------------------------------------------------------------------------
+
+
+def _versioned_fold(root: str, name: str, make_delta, merge):
+    """The replay guard and commit every streaming sink below shares,
+    as a ``foreachBatch`` callable (directly invokable, so tests reach
+    the guard paths without a stream). A non-empty micro-batch becomes
+    ``make_delta(batch_df)``; the first commit publishes it as is,
+    later ones publish ``merge(committed_state, delta)``.
+
+    State and ``batch_id`` publish at the same manifest swap, so a
+    batch replayed after any crash was either committed already —
+    ``batch_id == last``, skipped — or never became visible and folds
+    again from the same inputs. A ``batch_id`` BELOW the committed one
+    only happens when the checkpoint was deleted or moved while the
+    table survived: skipping would silently drop the new run's rows and
+    folding would double-apply, so it raises and leaves the table
+    untouched."""
+
+    def fold(batch_df: DataFrame, batch_id: int) -> None:
+        last = last_batch_id(root)
+        if batch_id == last:
+            return  # committed already — checkpoint replay
+        if batch_id < last:
+            raise RuntimeError(
+                f"{name}({root}): batch_id {batch_id} < committed {last} — "
+                "the checkpoint was reset while the table survived; restore "
+                "the original checkpoint or start a new table root."
+            )
+        if batch_df.isEmpty():
+            return
+        delta = make_delta(batch_df)
+        state = (
+            merge(read_table(batch_df.sparkSession, root), delta)
+            if table_exists(root)
+            else delta
+        )
+        commit_table(state, root, batch_id)
+
+    return fold
+
+
+def _fold_sink(stream: DataFrame, checkpoint_dir: str, root: str, name: str, make_delta, merge):
+    """Drain ``stream``'s backlog through :func:`_versioned_fold` in
+    bounded micro-batches, then stop (``availableNow``). Returns the
+    started query; callers ``awaitTermination()``."""
+    return (
+        stream.writeStream.foreachBatch(_versioned_fold(root, name, make_delta, merge))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def upsert_sink_stream_versioned(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    root: str,
+    keys: list[str],
+    order_col: str,
+    tie_breakers: list[str] | None = None,
+):
+    """Streaming keyed latest-wins table — the lakehouse
+    ``foreachBatch`` + MERGE sink (J3, ``datatrack_spark_utils.py:
+    306-362``): each micro-batch is deduped within itself, then merged
+    into the committed version. The result equals one batch
+    ``dedup_latest`` over the same input however the batches were cut."""
+    from .operators.upsert import merge_latest_wins
+    from .operators.windows import dedup_latest
+
+    return _fold_sink(
+        stream, checkpoint_dir, root, "upsert_sink_stream_versioned",
+        lambda batch: dedup_latest(batch, keys, order_col, tie_breakers),
+        lambda state, delta: merge_latest_wins(state, delta, keys, order_col, tie_breakers),
+    )
+
+
+def continuous_aggregate_stream_versioned(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    root: str,
+    keys: list[str],
+    value_col: str,
+):
+    """Streaming continuous aggregate: fold each micro-batch into the
+    persisted mergeable state (``operators/incremental.py``) — the
+    streaming face of ``ext_incremental_agg_merge``. Each batch costs
+    one |batch| partial agg + one |keys|-row merge; history is never
+    rescanned. The sum-merge is not idempotent, which is why the state
+    and its batch_id commit atomically."""
+    from .operators.incremental import merge_aggregate_state, partial_aggregate
+
+    return _fold_sink(
+        stream, checkpoint_dir, root, "continuous_aggregate_stream_versioned",
+        lambda batch: partial_aggregate(batch, keys, value_col),
+        lambda state, delta: merge_aggregate_state(state, delta, keys),
+    )
+
+
+def cusum_drift_stream_versioned(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    root: str,
+    keys: list[str],
+    order_col: str,
+    value_col: str,
+):
+    """Streaming CUSUM drift monitor: fold each micro-batch's drawup
+    summary (``operators/incremental.partial_drawup_state``) into the
+    persisted per-key state — the streaming face of
+    ``ext_incremental_cusum``. The drawup monoid is associative but
+    ORDER-SENSITIVE, so the source must deliver each key's rows in
+    non-decreasing ``order_col`` across batches (true for append-only
+    event logs / file drops named in time order; an out-of-order source
+    needs the watermark+sort front end of ``windowed_agg_stream``
+    first). Each batch costs one |batch| window pass + one |keys|-row
+    state merge; history is never rescanned."""
+    from .operators.incremental import merge_drawup_state, partial_drawup_state
+
+    return _fold_sink(
+        stream, checkpoint_dir, root, "cusum_drift_stream_versioned",
+        lambda batch: partial_drawup_state(batch, keys, order_col, value_col),
+        lambda state, delta: merge_drawup_state(state, delta, keys),
+    )
 
 
 def cdc_sink_stream_versioned(
@@ -528,49 +584,42 @@ def cdc_sink_stream_versioned(
     op_col: str,
     delete_op: str = "D",
 ):
-    """Streaming CDC sink with exactly-once COMMITS — the atomic
-    variant of ``streaming.cdc_sink_stream``: the same seq-aware
-    tombstone fold, but each micro-batch publishes through the commit
-    log's manifest swap with the batch_id recorded AT the commit
-    point. A batch replayed after any crash is either fully committed
-    (batch_id watermark detects and skips it) or never visible
-    (re-folded from identical inputs) — no two-statement window at
-    all. State rows carry ``__seq``/``__deleted`` exactly like the
-    managed-table sink; read current rows by filtering ``__deleted``
-    on ``read_table``.
+    """Streaming CDC sink (APPLY CHANGES INTO): fold a change stream —
+    upserts AND delete tombstones — into the table. Per key, the change
+    with the highest ``seq_col`` wins; ``seq_col`` must totally order
+    each key's changes (CDC logs carry the source LSN/commit-seq).
 
-    Returns the started query; callers ``awaitTermination()``."""
+    State rows keep ``__seq`` (last applied sequence per key) and
+    ``__deleted`` tombstones, which keeps the fold correct under
+    out-of-order delivery ACROSS micro-batches: a late lower-seq update
+    loses to the remembered winner, and a post-delete straggler cannot
+    resurrect the key while its tombstone is in the table. Read current
+    rows with :func:`cdc_current_state`. Tombstones may be vacuumed
+    once the source's replay horizon has passed them:
+    ``delete_rows(spark, root, F.col("__deleted") & (F.col("__seq") <
+    horizon))`` — the horizon is the caller's contract with the source
+    (e.g. the log's retention LSN)."""
     from pyspark.sql import Window
 
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= last_batch_id(root):
-            return  # already committed — checkpoint replay
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        tagged = (
-            batch_df.withColumn("__deleted", F.col(op_col) == F.lit(delete_op))
+    def latest(df: DataFrame) -> DataFrame:
+        w = Window.partitionBy(*keys).orderBy(F.desc("__seq"))
+        return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn")
+
+    return _fold_sink(
+        stream, checkpoint_dir, root, "cdc_sink_stream_versioned",
+        lambda batch: latest(
+            batch.withColumn("__deleted", F.col(op_col) == F.lit(delete_op))
             .withColumn("__seq", F.col(seq_col))
             .drop(op_col, seq_col)
-        )
-        if table_exists(root):
-            unioned = read_table(spark, root).unionByName(tagged)
-        else:
-            unioned = tagged
-        w = Window.partitionBy(*keys).orderBy(F.desc("__seq"))
-        folded = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        commit_table(folded, root, batch_id=batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        lambda state, delta: latest(state.unionByName(delta)),
     )
+
+
+def cdc_current_state(spark: SparkSession, root: str) -> DataFrame:
+    """Current rows of a :func:`cdc_sink_stream_versioned` table:
+    tombstones filtered, bookkeeping columns dropped."""
+    return read_table(spark, root).filter(~F.col("__deleted")).drop("__seq", "__deleted")
 
 
 # ---------------------------------------------------------------------------

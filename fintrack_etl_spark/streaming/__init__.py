@@ -16,10 +16,13 @@ Every streaming pipeline here has a batch twin in the query registry
 results stay oracle-checkable: run the stream with
 ``trigger(availableNow=True)`` over the same files and you get the
 batch answer.
+
+The stateful sinks that fold a stream into a table (latest-wins upsert,
+continuous aggregate, CDC apply, CUSUM drift) live in ``lake_tx``: they
+commit each micro-batch through its atomic manifest swap.
 """
 
 from .pipelines import (
-    continuous_aggregate_stream,
     conversion_pattern_stream,
     file_source_stream,
     run_available_now,
@@ -29,13 +32,11 @@ from .pipelines import (
     stream_dedup_latest,
     stream_interval_join,
     substring_dedup_stream,
-    upsert_sink_stream,
     windowed_agg_stream,
     winnow_fingerprint_stream,
 )
 
 __all__ = [
-    "continuous_aggregate_stream",
     "conversion_pattern_stream",
     "file_source_stream",
     "run_available_now",
@@ -45,7 +46,6 @@ __all__ = [
     "stream_dedup_latest",
     "stream_interval_join",
     "substring_dedup_stream",
-    "upsert_sink_stream",
     "windowed_agg_stream",
     "winnow_fingerprint_stream",
 ]

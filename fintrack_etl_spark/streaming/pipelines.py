@@ -13,7 +13,7 @@ Scale notes (1000-executor target):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -177,153 +177,6 @@ def run_available_now(
         .start()
     )
     q.awaitTermination()
-
-
-def upsert_sink_stream(
-    stream: DataFrame,
-    checkpoint_dir: str,
-    table: str,
-    keys: list[str],
-    order_col: str,
-    tie_breakers: list[str] | None = None,
-):
-    """Streaming → keyed latest-wins table: the production lakehouse
-    sink pattern (``foreachBatch`` + MERGE), built on the same
-    ``merge_latest_wins`` the batch path uses (J3 fallback,
-    ``datatrack_spark_utils.py:306-362`` semantics).
-
-    Each micro-batch is first deduped within itself, then merged into
-    the managed table. End-to-end exactly-once comes from the pair
-    (checkpointed source offsets, deterministic idempotent merge): a
-    replayed batch re-merges to the identical table state, so crash
-    recovery cannot double-apply. The merged result is pinned with
-    ``localCheckpoint`` before the overwrite because the plan reads
-    the same table it replaces. For an ATOMIC commit point (no
-    overwrite window at all) use
-    ``lake_tx.upsert_sink_stream_versioned``.
-
-    Returns the started query; callers ``awaitTermination()``.
-    """
-    from ..operators.upsert import merge_latest_wins
-    from ..operators.windows import dedup_latest
-
-    def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        incoming = dedup_latest(batch_df, keys, order_col, tie_breakers)
-        if spark.catalog.tableExists(table):
-            merged = merge_latest_wins(
-                spark.table(table), incoming, keys, order_col, tie_breakers
-            ).localCheckpoint()
-            merged.write.mode("overwrite").saveAsTable(table)
-            # the table IS the persistence now; without this, a
-            # long-running query strands one table-size block set per
-            # micro-batch (unbounded block-manager growth)
-            from ..operators.memo import unpersist_checkpointed
-
-            unpersist_checkpointed(merged)
-        else:
-            incoming.write.saveAsTable(table)
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def continuous_aggregate_stream(
-    stream: DataFrame,
-    checkpoint_dir: str,
-    table: str,
-    keys: list[str],
-    value_col: str,
-):
-    """Streaming continuous aggregate: fold each micro-batch into the
-    persisted mergeable state (``operators/incremental.py``) — the
-    streaming face of ``ext_incremental_agg_merge``. Each batch costs
-    one |batch| partial agg + one |keys|-row merge; history is never
-    rescanned.
-
-    Unlike latest-wins MERGE, a sum-merge is NOT idempotent — replaying
-    a batch after a crash would double-count. Exactly-once therefore
-    needs the transactional-foreachBatch pattern: the state table's
-    companion ``<table>__meta`` records the last folded ``batch_id``;
-    a replayed batch (same id from the checkpoint) is skipped, and a
-    batch id BELOW the recorded watermark — only possible when the
-    checkpoint dir was deleted/relocated while the state tables
-    survived — fails fast instead of silently skipping every batch.
-    The state/meta writes are two statements here (a real lakehouse
-    does both in one MERGE transaction — without the Iceberg jar the
-    commit-point gap is documented rather than hidden);
-    ``lake_tx.continuous_aggregate_stream_versioned`` closes the gap
-    with an atomic manifest-swap commit.
-
-    Returns the started query; callers ``awaitTermination()``.
-    """
-    from ..operators.incremental import merge_aggregate_state, partial_aggregate
-
-    fold = transactional_fold(
-        table,
-        "continuous_aggregate_stream",
-        lambda batch_df: partial_aggregate(batch_df, keys, value_col),
-        lambda state, delta: merge_aggregate_state(state, delta, keys),
-    )
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def transactional_fold(table: str, name: str, make_delta, merge_state):
-    """The ONE copy of the transactional-foreachBatch scaffolding every
-    mergeable-state sink shares: the ``<table>__meta`` batch-id replay
-    guard (non-idempotent merges must skip a replayed id and fail fast
-    on an id BELOW the watermark — only possible when the checkpoint
-    dir was deleted/relocated while the state tables survived), the
-    merge-or-create state write, and the batch-id record. The
-    state/meta writes are two statements (the commit-point gap is
-    documented; ``lake_tx``'s versioned sinks close it with an atomic
-    manifest swap). Returns the fold callable — directly invokable in
-    tests to exercise the guard paths without a stream."""
-    meta_table = f"{table}__meta"
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if spark.catalog.tableExists(meta_table):
-            row = spark.table(meta_table).first()
-            # row is None if a crash landed between table truncate and
-            # write — treat as "no batch recorded" and re-fold
-            if row is not None:
-                last = row["last_batch_id"]
-                if batch_id == last:
-                    return  # legitimate checkpoint replay of the last batch
-                if batch_id < last:
-                    raise RuntimeError(
-                        f"{name}({table}): batch_id {batch_id} < recorded "
-                        f"last_batch_id {last} — the checkpoint was reset "
-                        f"while state survived. Drop {table}/{meta_table} "
-                        "or restore the original checkpoint dir."
-                    )
-        delta = make_delta(batch_df)
-        if spark.catalog.tableExists(table):
-            merged = merge_state(spark.table(table), delta).localCheckpoint()
-            merged.write.mode("overwrite").saveAsTable(table)
-            # free the per-batch merge pin (see upsert_sink_stream)
-            from ..operators.memo import unpersist_checkpointed
-
-            unpersist_checkpointed(merged)
-        else:
-            delta.write.saveAsTable(table)
-        spark.createDataFrame([(batch_id,)], "last_batch_id long").write.mode(
-            "overwrite"
-        ).saveAsTable(meta_table)
-
-    return fold
 
 
 def stream_interval_join(
@@ -508,212 +361,6 @@ def scd2_stream(
     )
 
 
-def cdc_sink_stream(
-    stream: DataFrame,
-    checkpoint_dir: str,
-    table: str,
-    keys: list[str],
-    seq_col: str,
-    op_col: str,
-    delete_op: str = "D",
-):
-    """Streaming CDC sink (APPLY CHANGES INTO): fold a change stream —
-    upserts AND delete tombstones — into a managed table. The
-    row-level sibling of ``continuous_aggregate_stream``: where that
-    folds mergeable agg state, this folds keyed row state with
-    deletes.
-
-    The state table retains ``__seq`` (last applied sequence per key)
-    and ``__deleted`` tombstone rows, which is what makes the fold
-    correct under BOTH at-least-once replay and out-of-order delivery
-    ACROSS micro-batches: a late-arriving lower-seq update loses to
-    the remembered winner, and a post-delete straggler cannot
-    resurrect the key because the tombstone (with its higher seq) is
-    still in the table. Per key, the change with the highest
-    ``seq_col`` wins — ``seq_col`` must totally order each key's
-    changes (CDC logs carry the source LSN/commit-seq, which does).
-    Read the current rows with :func:`cdc_current_state`; tombstones
-    are vacuumable once the source's replay horizon has passed them
-    (same retention reasoning as lake_tx snapshot expiry).
-
-    Same two-statement commit window as ``upsert_sink_stream``
-    (overwrite after localCheckpoint); the atomic variant composes the
-    identical fold with ``lake_tx``'s manifest-swap commit.
-
-    Returns the started query; callers ``awaitTermination()``.
-    """
-
-    def fold(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        tagged = (
-            batch_df.withColumn("__deleted", F.col(op_col) == F.lit(delete_op))
-            .withColumn("__seq", F.col(seq_col))
-            .drop(op_col, seq_col)
-        )
-        if spark.catalog.tableExists(table):
-            unioned = spark.table(table).unionByName(tagged)
-        else:
-            unioned = tagged
-        w = Window.partitionBy(*keys).orderBy(F.desc("__seq"))
-        folded = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .localCheckpoint()
-        )
-        folded.write.mode("overwrite").saveAsTable(table)
-        # free the per-batch fold pin (see upsert_sink_stream)
-        from ..operators.memo import unpersist_checkpointed
-
-        unpersist_checkpointed(folded)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def cdc_current_state(spark, table: str) -> DataFrame:
-    """Current rows of a :func:`cdc_sink_stream` table: tombstones
-    filtered, bookkeeping columns dropped."""
-    return spark.table(table).filter(~F.col("__deleted")).drop("__seq", "__deleted")
-
-
-def cdc_vacuum_tombstones(spark: SparkSession, table: str, below_seq: int) -> int:
-    """Retention for :func:`cdc_sink_stream` state: drop tombstone rows
-    whose ``__seq`` is below the source's replay horizon (changes older
-    than that can never be redelivered, so the tombstone has nothing
-    left to suppress). Live rows are never touched. Returns the number
-    of tombstones removed.
-
-    The horizon is the CALLER's contract with the source (e.g. the
-    log's retention LSN) — vacuuming above it re-opens the resurrect
-    window the tombstone existed to close.
-    """
-    cur = spark.table(table)
-    doomed = cur.filter(F.col("__deleted") & (F.col("__seq") < below_seq))
-    n = doomed.count()
-    if n:
-        kept = cur.filter(
-            ~(F.col("__deleted") & (F.col("__seq") < below_seq))
-        ).localCheckpoint()
-        kept.write.mode("overwrite").saveAsTable(table)
-        from ..operators.memo import unpersist_checkpointed
-
-        unpersist_checkpointed(kept)
-    return n
-
-
-def cusum_drift_stream(
-    stream: DataFrame,
-    checkpoint_dir: str,
-    table: str,
-    keys: list[str],
-    order_col: str,
-    value_col: str,
-):
-    """Streaming CUSUM drift monitor: fold each micro-batch's drawup
-    summary (``operators/incremental.partial_drawup_state``) into the
-    persisted per-key state — the streaming face of
-    ``ext_incremental_cusum``. The drawup monoid is associative but
-    ORDER-SENSITIVE, so this sink requires the source to deliver each
-    key's rows in non-decreasing ``order_col`` across batches (true
-    for append-only event logs / file drops named in time order; an
-    out-of-order source needs the watermark+sort front end of
-    ``windowed_agg_stream`` first). Same transactional-foreachBatch
-    replay guard as ``continuous_aggregate_stream``: drawup merges are
-    not idempotent, so a replayed batch id is skipped and a batch id
-    below the recorded watermark fails fast.
-
-    Each batch costs one |batch| window pass + one |keys|-row state
-    merge; history is never rescanned. Returns the started query."""
-    from ..operators.incremental import merge_drawup_state, partial_drawup_state
-
-    fold = transactional_fold(
-        table,
-        "cusum_drift_stream",
-        lambda batch_df: partial_drawup_state(batch_df, keys, order_col, value_col),
-        lambda state, delta: merge_drawup_state(state, delta, keys),
-    )
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def first_seen_stream(
-    events: DataFrame,
-    keys: tuple[str, ...] = ("event_id",),
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """Streaming first-seen dedup on Spark 4's TYPED state API
-    (``transformWithStateInPandas`` — the successor to
-    ``applyInPandasWithState``): one boolean ``ValueState`` per key;
-    the first arrival of a key emits its key row, every repeat is
-    dropped executor-side. With ``ttl_ms`` the state entry expires on
-    its own (RocksDB-native TTL), bounding the store for unbounded key
-    spaces — re-arrivals after expiry re-emit, i.e. at-most-once per
-    TTL window, the standard dedup-horizon contract.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) — transformWithState is
-    RocksDB-only by design; the test sets it, production sessions
-    should too (it is also the right store for 100 TB state:
-    incremental checkpoints, no JVM-heap residency). ALSO requires the
-    ``protobuf`` Python package (the typed-state wire protocol —
-    ``pyspark.sql.streaming.proto``); it is absent from this sandbox,
-    so the test skips with a documented environment note and the
-    operator is exercised there only up to plan construction — the
-    same honest-gap discipline as the Iceberg-only procedures.
-
-    Scale: state is one tombstone bit per distinct key (RocksDB,
-    spilled), the shuffle is the single groupBy(keys) exchange
-    (r12, guide §4.1: pre-projected to the key columns — the operator
-    emits only key rows, so any payload column would cross the state
-    shuffle and the Arrow boundary for nothing), and the Python hop is
-    Arrow-batched per key group."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    key_cols = list(keys)
-    events = events.select(*key_cols)
-
-    class _FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getValueState(
-                "seen", "seen boolean", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._seen.exists():
-                return
-            self._seen.update((True,))
-            yield pd.DataFrame({c: [k] for c, k in zip(key_cols, key)})
-
-        def close(self) -> None:
-            pass
-
-    out_ddl = ", ".join(
-        f"{c} {events.schema[c].dataType.simpleString()}" for c in key_cols
-    )
-    return events.groupBy(*key_cols).transformWithStateInPandas(
-        _FirstSeen(),
-        outputStructType=out_ddl,
-        outputMode="append",
-        timeMode="processingTime" if ttl_ms is not None else "none",
-    )
-
-
 def _conversion_step(st: int, cs: int, n: int, mc: int, ch: str):
     """One DFA step of the view→clicks→purchase ('vc+p') matcher —
     the incremental form of the batch regex scan
@@ -841,9 +488,8 @@ def winnow_fingerprint_stream(
     w: int = 8,
 ) -> DataFrame:
     """Streaming twin of the winnowing fingerprint dedup (x82,
-    ``textops.winnow_fingerprints``) — the 13th streaming pipeline:
-    each arriving document's winnowed fingerprints are selected in a
-    pure map pass (the SIGMOD-2003 rightmost-window-min is an array
+    ``textops.winnow_fingerprints``): each arriving document's
+    winnowed fingerprints are selected in a pure map pass (the SIGMOD-2003 rightmost-window-min is an array
     expression over the single input row, so it is streaming-legal as
     a narrow transformation), probed against the STATIC reference
     fingerprint set with a stream-static left join, and the per-doc

@@ -196,6 +196,58 @@ def test_streaming_continuous_aggregate_versioned_matches_batch(spark, events_di
     assert sorted(map(tuple, lake_tx.read_table(spark, root).collect())) == before
 
 
+_SINKS = {
+    "upsert": lambda s, ck, root: lake_tx.upsert_sink_stream_versioned(
+        s, ck, root, ["k"], "i"
+    ),
+    "aggregate": lambda s, ck, root: lake_tx.continuous_aggregate_stream_versioned(
+        s, ck, root, ["k"], "x"
+    ),
+    "cusum": lambda s, ck, root: lake_tx.cusum_drift_stream_versioned(
+        s, ck, root, ["k"], "i", "x"
+    ),
+    "cdc": lambda s, ck, root: lake_tx.cdc_sink_stream_versioned(
+        s, ck, root, ["k"], "seq", "op"
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(_SINKS))
+def test_streaming_sink_refuses_reset_checkpoint(spark, tmp_path, sink):
+    """A checkpoint reset while the table survives restarts batch ids
+    at 0, below the committed id. Every sink must fail fast and leave
+    the table untouched; skipping the batch would silently drop the
+    newly landed row."""
+    from pyspark.sql.streaming import StreamingQueryException
+
+    from fintrack_etl_spark.streaming import file_source_stream
+
+    ddl = "k long, i long, x long, seq long, op string"
+    land = str(tmp_path / "land")
+    root = str(tmp_path / "sink")
+
+    def land_row(i):
+        spark.createDataFrame([(i, i, i, i, "U")], ddl).coalesce(1).write.mode(
+            "append"
+        ).parquet(land)
+
+    def drain(ck, **kw):
+        stream = file_source_stream(spark, land, ddl, **kw)
+        return _SINKS[sink](stream, str(tmp_path / ck), root)
+
+    for i in range(3):
+        land_row(i)
+    drain("ck1", max_files_per_trigger=1).awaitTermination()
+    assert lake_tx.last_batch_id(root) == 2
+    before = sorted(map(tuple, lake_tx.read_table(spark, root).collect()))
+
+    land_row(3)
+    q = drain("ck2")
+    with pytest.raises(StreamingQueryException, match="checkpoint was reset"):
+        q.awaitTermination()
+    assert sorted(map(tuple, lake_tx.read_table(spark, root).collect())) == before
+
+
 def test_time_travel_and_vacuum_interaction(spark, tmp_path):
     """Any retained snapshot is readable by version (immutable dirs);
     a vacuumed one fails with a named error, never a wrong answer."""
@@ -450,9 +502,9 @@ def test_cdc_sink_versioned_matches_batch_and_replays_cleanly(spark, tmp_path):
     import os
 
     from fintrack_etl_spark.lake_tx import (
+        cdc_current_state,
         cdc_sink_stream_versioned,
         current_version,
-        read_table,
     )
     from fintrack_etl_spark.operators.upsert import apply_changes
     from fintrack_etl_spark.streaming.pipelines import file_source_stream
@@ -484,10 +536,7 @@ def test_cdc_sink_versioned_matches_batch_and_replays_cleanly(spark, tmp_path):
     v_after = current_version(root)
     got = {
         tuple(r)
-        for r in read_table(spark, root)
-        .filter(~F.col("__deleted"))
-        .select("user_id", "event_id")
-        .collect()
+        for r in cdc_current_state(spark, root).select("user_id", "event_id").collect()
     }
     payload = spark.read.parquet(logdir)
     empty = spark.createDataFrame([], payload.drop("seq", "op").schema)
@@ -498,6 +547,8 @@ def test_cdc_sink_versioned_matches_batch_and_replays_cleanly(spark, tmp_path):
         .collect()
     }
     assert got == want and len(got) > 0
+    # tombstoned keys really are gone
+    assert not any(k % 3 == 0 for k, _ in got)
 
     drain()  # same checkpoint: no new commits
     assert current_version(root) == v_after

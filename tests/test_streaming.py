@@ -152,40 +152,6 @@ def test_running_totals_stateful_stream(spark, events_dir, tmp_path):
         assert abs(f[k][1] - b[k][1]) < 1e-6
 
 
-def test_upsert_sink_stream_matches_batch_merge(spark, events_dir, tmp_path):
-    """foreachBatch upsert sink: after draining the backlog file-by-file,
-    the managed table must equal a single batch latest-wins dedup over
-    the same input — regardless of how the batches were cut."""
-    import os
-
-    from fintrack_etl_spark.operators.windows import dedup_latest
-    from fintrack_etl_spark.streaming.pipelines import (
-        file_source_stream,
-        upsert_sink_stream,
-    )
-
-    ev = spark.read.parquet(events_dir)
-    schema = ev.schema
-    tbl = "upsert_sink_t"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    stream = file_source_stream(spark, events_dir, schema, max_files_per_trigger=1)
-    q = upsert_sink_stream(
-        stream, os.path.join(str(tmp_path), "ck"), tbl,
-        keys=["user_id"], order_col="ts", tie_breakers=["event_id"],
-    )
-    q.awaitTermination()
-
-    got = {tuple(r) for r in spark.table(tbl).select("user_id", "event_id").collect()}
-    want = {
-        tuple(r)
-        for r in dedup_latest(ev, ["user_id"], "ts", ["event_id"])
-        .select("user_id", "event_id")
-        .collect()
-    }
-    assert got == want and len(got) > 0
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
 def test_stream_interval_join_matches_batch(spark, events_dir, tmp_path):
     """Drain a stream-stream interval self-join (click→follow-up within
     30 min per user) and compare against the identical batch join."""
@@ -253,37 +219,6 @@ def test_stream_content_dedup_matches_batch_x1(spark, sf_dir, tmp_path):
     )
 
 
-def test_continuous_aggregate_stream_matches_batch(spark, events_dir, tmp_path):
-    """The streamed fold over micro-batches must equal the from-scratch
-    batch aggregate, and a checkpoint-replayed drain must NOT
-    double-count (sum-merge is not idempotent; the batch-id guard is)."""
-    from fintrack_etl_spark.operators.incremental import finalize_aggregate, partial_aggregate
-    from fintrack_etl_spark.streaming import continuous_aggregate_stream
-
-    schema = _schema(spark, events_dir)
-    tbl = f"cagg_{uuid.uuid4().hex[:8]}"
-    ck = os.path.join(str(tmp_path), "ck")
-
-    stream = file_source_stream(spark, events_dir, schema, max_files_per_trigger=1)
-    q = continuous_aggregate_stream(stream, ck, tbl, ["event_type"], "value")
-    q.awaitTermination()
-
-    batch = finalize_aggregate(
-        partial_aggregate(spark.read.parquet(events_dir), ["event_type"], "value"),
-        ["event_type"],
-    )
-    got = finalize_aggregate(spark.table(tbl), ["event_type"])
-    assert _rows(got, "event_type") == _rows(batch, "event_type")
-
-    # drain again over the same checkpoint + unchanged dir: no new
-    # batches, state unchanged
-    stream2 = file_source_stream(spark, events_dir, schema, max_files_per_trigger=1)
-    q2 = continuous_aggregate_stream(stream2, ck, tbl, ["event_type"], "value")
-    q2.awaitTermination()
-    got2 = finalize_aggregate(spark.table(tbl), ["event_type"])
-    assert _rows(got2, "event_type") == _rows(batch, "event_type")
-
-
 def test_quality_gate_composes_with_streaming(spark, events_dir, tmp_path):
     """Row-level expectations are narrow ops, so the SAME
     split_by_expectations the batch path uses runs unchanged on a
@@ -307,42 +242,6 @@ def test_quality_gate_composes_with_streaming(spark, events_dir, tmp_path):
     assert got.count() == good_batch.count()
     assert got.filter(F.col("event_type") == "error").count() == 0
     assert got.count() + bad_batch.count() == spark.read.parquet(events_dir).count()
-
-
-def test_continuous_aggregate_detects_checkpoint_reset(spark, events_dir, tmp_path):
-    """Deleting/relocating the checkpoint while the state tables survive
-    restarts batch ids at 0; the guard must FAIL FAST (stale-state
-    silent skip and double-count are both wrong answers)."""
-    import pytest
-    from pyspark.sql.streaming import StreamingQueryException
-
-    from fintrack_etl_spark.streaming import continuous_aggregate_stream
-
-    schema = _schema(spark, events_dir)
-    tbl = f"cagg_{uuid.uuid4().hex[:8]}"
-
-    q = continuous_aggregate_stream(
-        file_source_stream(spark, events_dir, schema, max_files_per_trigger=1),
-        os.path.join(str(tmp_path), "ck1"),
-        tbl,
-        ["event_type"],
-        "value",
-    )
-    q.awaitTermination()
-    before = _rows(spark.table(tbl), "event_type")
-
-    # fresh checkpoint, surviving state: batch 0 arrives below watermark
-    q2 = continuous_aggregate_stream(
-        file_source_stream(spark, events_dir, schema, max_files_per_trigger=1),
-        os.path.join(str(tmp_path), "ck2"),
-        tbl,
-        ["event_type"],
-        "value",
-    )
-    with pytest.raises(StreamingQueryException, match="checkpoint was reset"):
-        q2.awaitTermination()
-    # and the state was left untouched by the failed run
-    assert _rows(spark.table(tbl), "event_type") == before
 
 
 def test_stratified_sample_composes_with_streaming(spark, events_dir, tmp_path):
@@ -602,98 +501,42 @@ def test_stream_interval_join_left_outer_late_match_cannot_retract_null(
     assert (30, 31) in rows
 
 
-def test_cdc_sink_stream_matches_batch_apply(spark, events_dir, tmp_path):
-    """foreachBatch CDC sink: drain a change log cut into per-file
-    micro-batches; the managed table must equal one batch
-    apply_changes over the whole log — updates applied, tombstoned
-    keys absent — regardless of batch boundaries."""
-    import os
-
-    from fintrack_etl_spark.operators.upsert import apply_changes
-    from fintrack_etl_spark.streaming.pipelines import (
+def test_cdc_vacuum_drops_only_expired_tombstones(spark, tmp_path):
+    """Tombstone vacuum on a versioned CDC table is one ``delete_rows``
+    below the replay horizon: it removes tombstones strictly below the
+    horizon and nothing else, the current-state view is unchanged, the
+    sink's replay watermark survives, and a second run deletes nothing."""
+    from fintrack_etl_spark.lake_tx import (
         cdc_current_state,
-        cdc_sink_stream,
-        file_source_stream,
+        commit_table,
+        delete_rows,
+        last_batch_id,
+        read_table,
     )
 
-    ev = spark.read.parquet(events_dir)
-    # synthesize a CDC log from events: key=user_id, seq=epoch micros,
-    # op=D for every third user's latest record
-    # seq = event_id: unique per key, so the fold's winner is
-    # batch-cut-independent even though repartition(4) scatters the log
-    # across files in random order (out-of-order delivery is the point)
-    log = ev.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.col("event_id").alias("seq"),
-        F.when(F.col("user_id") % 3 == 0, "D").otherwise("U").alias("op"),
-    )
-    logdir = os.path.join(str(tmp_path), "cdclog")
-    log.repartition(4).write.parquet(logdir)
-
-    tbl = "cdc_sink_t"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    # a crashed earlier run can leave the managed location behind after
-    # the catalog entry is gone; saveAsTable then refuses the name
-    import shutil
-
-    shutil.rmtree(f"spark-warehouse/{tbl}", ignore_errors=True)
-    stream = file_source_stream(
-        spark, logdir, spark.read.parquet(logdir).schema, max_files_per_trigger=1
-    )
-    q = cdc_sink_stream(
-        stream, os.path.join(str(tmp_path), "ck"), tbl,
-        keys=["user_id"], seq_col="seq", op_col="op",
-    )
-    q.awaitTermination()
-
-    payload = spark.read.parquet(logdir)
-    empty = spark.createDataFrame([], payload.drop("seq", "op").schema)
-    want_df = apply_changes(empty, payload, ["user_id"], "seq", "op")
-    got = {
-        tuple(r)
-        for r in cdc_current_state(spark, tbl).select("user_id", "event_id").collect()
-    }
-    want = {tuple(r) for r in want_df.select("user_id", "event_id").collect()}
-    assert got == want and len(got) > 0
-    # tombstoned keys really are gone
-    assert not any(k % 3 == 0 for k, _ in got)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-
-def test_cdc_vacuum_drops_only_expired_tombstones(spark):
-    """Vacuum removes tombstones strictly below the replay horizon and
-    nothing else; the current-state view is unchanged."""
-    from fintrack_etl_spark.streaming.pipelines import (
-        cdc_current_state,
-        cdc_vacuum_tombstones,
-    )
-
-    tbl = "cdc_vac_t"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    import shutil
-
-    shutil.rmtree(f"spark-warehouse/{tbl}", ignore_errors=True)
+    root = str(tmp_path / "cdc_vac")
     rows = [
         (1, "a", 10, False),   # live
         (2, "b", 5, True),     # expired tombstone
         (3, "c", 20, True),    # tombstone still inside horizon
     ]
-    spark.createDataFrame(
-        rows, "k int, v string, __seq long, __deleted boolean"
-    ).write.saveAsTable(tbl)
+    commit_table(
+        spark.createDataFrame(rows, "k int, v string, __seq long, __deleted boolean"),
+        root,
+        batch_id=7,
+    )
+    expired = F.col("__deleted") & (F.col("__seq") < 15)
 
-    before = {tuple(r) for r in cdc_current_state(spark, tbl).collect()}
-    n = cdc_vacuum_tombstones(spark, tbl, below_seq=15)
+    before = {tuple(r) for r in cdc_current_state(spark, root).collect()}
+    _, n = delete_rows(spark, root, expired)
     assert n == 1
-    keys = {r["k"]: r["__deleted"] for r in spark.table(tbl).collect()}
+    keys = {r["k"]: r["__deleted"] for r in read_table(spark, root).collect()}
     assert keys == {1: False, 3: True}
-    after = {tuple(r) for r in cdc_current_state(spark, tbl).collect()}
+    after = {tuple(r) for r in cdc_current_state(spark, root).collect()}
     assert after == before
+    assert last_batch_id(root) == 7  # the replay guard survives the vacuum
     # idempotent: nothing left below the horizon
-    assert cdc_vacuum_tombstones(spark, tbl, below_seq=15) == 0
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    assert delete_rows(spark, root, expired)[1] == 0
 
 
 def test_watermark_drops_late_rows_and_bounds_state(spark, tmp_path):
@@ -776,8 +619,12 @@ def test_cusum_drift_stream_matches_batch(spark, tmp_path):
     batch-id guard)."""
     import random
 
+    from fintrack_etl_spark.lake_tx import (
+        current_version,
+        cusum_drift_stream_versioned,
+        read_table,
+    )
     from fintrack_etl_spark.operators.incremental import partial_drawup_state
-    from fintrack_etl_spark.streaming.pipelines import cusum_drift_stream
 
     rng = random.Random(99)
     rows = [
@@ -794,92 +641,47 @@ def test_cusum_drift_stream_matches_batch(spark, tmp_path):
         time.sleep(1.1)  # distinct mtimes keep drain order deterministic
 
     schema = spark.read.parquet(land).schema
-    tbl = f"cusum_{uuid.uuid4().hex[:8]}"
+    root = os.path.join(str(tmp_path), "cusum")
     ck = os.path.join(str(tmp_path), "ck")
     stream = file_source_stream(spark, land, schema, max_files_per_trigger=1)
-    q = cusum_drift_stream(stream, ck, tbl, ["k"], "i", "x")
+    q = cusum_drift_stream_versioned(stream, ck, root, ["k"], "i", "x")
     q.awaitTermination()
+
+    def state():
+        return {r["k"]: (r["du_s"], r["du_d"]) for r in read_table(spark, root).collect()}
 
     batch = partial_drawup_state(
         spark.createDataFrame(rows, "k string, i int, x long"), ["k"], "i", "x"
     )
-    got = {r["k"]: (r["du_s"], r["du_d"]) for r in spark.table(tbl).collect()}
     want = {r["k"]: (r["du_s"], r["du_d"]) for r in batch.collect()}
-    assert got == want
+    assert state() == want
 
-    # replay drain: unchanged state
+    # replay drain: no new commit, unchanged state
+    v = current_version(root)
     stream2 = file_source_stream(spark, land, schema, max_files_per_trigger=1)
-    q2 = cusum_drift_stream(stream2, ck, tbl, ["k"], "i", "x")
+    q2 = cusum_drift_stream_versioned(stream2, ck, root, ["k"], "i", "x")
     q2.awaitTermination()
-    got2 = {r["k"]: (r["du_s"], r["du_d"]) for r in spark.table(tbl).collect()}
-    assert got2 == want
+    assert current_version(root) == v and state() == want
 
-    # exercise the batch-id guard DIRECTLY (the drained checkpoint
-    # delivers no batches, so the paths above never run it): a
-    # replayed last id must skip, an id below the watermark must raise
-    from fintrack_etl_spark.operators.incremental import (
-        merge_drawup_state,
-        partial_drawup_state,
-    )
-    from fintrack_etl_spark.streaming.pipelines import transactional_fold
+    # exercise the shared batch-id guard DIRECTLY (the drained
+    # checkpoint delivers no batches, so the paths above never run it):
+    # a replayed last id must skip, an id below the watermark must raise
+    from fintrack_etl_spark.lake_tx import _versioned_fold, last_batch_id
+    from fintrack_etl_spark.operators.incremental import merge_drawup_state
 
-    fold = transactional_fold(
-        tbl,
-        "cusum_drift_stream",
+    fold = _versioned_fold(
+        root,
+        "cusum_drift_stream_versioned",
         lambda b: partial_drawup_state(b, ["k"], "i", "x"),
         lambda s, d: merge_drawup_state(s, d, ["k"]),
     )
-    last = spark.table(f"{tbl}__meta").first()["last_batch_id"]
+    last = last_batch_id(root)
     poison = spark.createDataFrame([("a", 999, 10**6)], "k string, i int, x long")
     fold(poison, last)  # replay of the recorded id: skipped, state intact
-    got3 = {r["k"]: (r["du_s"], r["du_d"]) for r in spark.table(tbl).collect()}
-    assert got3 == want
+    assert current_version(root) == v and state() == want
     with pytest.raises(RuntimeError, match="checkpoint was reset"):
         fold(poison, last - 1)
-
-
-def test_first_seen_typed_state_matches_batch_distinct(spark, events_dir, tmp_path):
-    """Spark 4 typed-state path (transformWithStateInPandas +
-    RocksDB): draining the backlog through first_seen_stream must
-    emit each distinct user exactly once — the batch DISTINCT.
-
-    The typed-state wire protocol needs the protobuf package
-    (pyspark.sql.streaming.proto); without it the TWS driver worker
-    cannot start, so this skips in that environment after verifying
-    the operator still PLANS (analysis succeeds)."""
-    from fintrack_etl_spark.streaming.pipelines import first_seen_stream
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        schema = _schema(spark, events_dir)
-        stream = file_source_stream(spark, events_dir, schema)
-        out = first_seen_stream(stream, keys=("user_id",))
-        assert out.isStreaming and out.columns == ["user_id"]
-        pytest.skip("protobuf absent: transformWithState runtime unavailable")
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        schema = _schema(spark, events_dir)
-        stream = file_source_stream(spark, events_dir, schema, max_files_per_trigger=1)
-        out = first_seen_stream(stream, keys=("user_id",))
-        run_available_now(out, str(tmp_path / "ck"), "first_seen_tbl")
-        got = [r["user_id"] for r in spark.table("first_seen_tbl").collect()]
-        want = {
-            r["user_id"]
-            for r in spark.read.parquet(events_dir).select("user_id").distinct().collect()
-        }
-        assert sorted(got) == sorted(want)      # every key exactly once
-        assert len(got) == len(set(got))        # no key emitted twice
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    assert current_version(root) == v and state() == want
 
 
 def test_conversion_dfa_equals_regex_scan():
